@@ -1435,64 +1435,6 @@ class TestIncrementalDedup:
         assert not out[0]["is_kept"] and out[0]["dup_of"] == 1
 
 
-class TestRankedPrefixesSkewSafe:
-    def test_skew_safe_formulation_identical(self, spark):
-        """ranked_prefixes(skew_safe=True) swaps the shingle-keyed
-        window for a map-side-combined groupBy + AQE-splittable
-        join-back; the ranked prefix set (and hence every downstream
-        candidate/verdict) must be IDENTICAL — only the physical
-        skew ceiling differs."""
-        from pyspark.sql import functions as F
-
-        from zikeiretsu_rs_spark.operators import dedup
-
-        docs = spark.read.parquet(
-            "/root/testdata/sf0.001/documents.parquet"
-        )
-        # add a boilerplate stop-phrase to most docs (the hot-shingle
-        # case the flag exists for)
-        phrase = " ".join(f"zz{i}" for i in range(10))
-        skewed = docs.withColumn(
-            "text",
-            F.when(
-                F.col("doc_id") % 5 != 0,
-                F.concat_ws(" ", F.col("text"), F.lit(phrase)),
-            ).otherwise(F.col("text")),
-        )
-        a = sorted(
-            map(
-                tuple,
-                dedup.ranked_prefixes(
-                    skewed, "doc_id", "text", 3, 0.5, hash_shingles=True
-                ).collect(),
-            )
-        )
-        b = sorted(
-            map(
-                tuple,
-                dedup.ranked_prefixes(
-                    skewed, "doc_id", "text", 3, 0.5,
-                    hash_shingles=True, skew_safe=True,
-                ).collect(),
-            )
-        )
-        assert a == b and len(a) > 0
-        # and the skew-safe plan really has no shingle-keyed window
-        df_safe = dedup.ranked_prefixes(
-            skewed, "doc_id", "text", 3, 0.5,
-            hash_shingles=True, skew_safe=True,
-        )
-        plan = df_safe._jdf.queryExecution().explainString(
-            spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-                "formatted"
-            )
-        )
-        import re
-
-        for m in re.finditer(r"windowspecdefinition\(([^)]*)\)", plan):
-            assert "shingle" not in m.group(1).split(",")[0], plan
-
-
 class TestIncrementalDedupRandomized:
     def test_random_corpora_match_brute_rule(self, spark):
         """Three seeds x near-dup-heavy random corpora: the
@@ -1634,31 +1576,64 @@ class TestSignatureScoredLake:
             assert j[(1, 3)] == 0.0 and j[(1, 4)] == 0.0, (dense, got)
             assert j[(1, 2)] == round(3 / 5, 6), (dense, got)
 
-    def test_doc_signatures_match_word_shingles(self, spark):
-        """doc_signatures is the collect_list of the hashed distinct
-        shingles — sizes and membership must agree with word_shingles
-        exactly (the property the stored-scoring equivalence rides
-        on)."""
+    @pytest.mark.parametrize("hashed", [True, False])
+    def test_shingle_sets_match_word_shingles(self, spark, hashed):
+        """shingle_sets is the per-doc set of the (optionally hashed)
+        distinct shingles — sizes and membership must agree with
+        word_shingles exactly (the property the stored-scoring
+        equivalence rides on), in-doc repeats included."""
         docs = spark.createDataFrame(
             [(1, "a b c d e"), (2, "a b a b a b"), (3, "x")],
             ["doc_id", "text"],
         )
-        sigs = {
+        sets = {
             r["doc_id"]: sorted(r["_set"])
-            for r in dedup.doc_signatures(
-                docs, "doc_id", "text", n=2
+            for r in dedup.shingle_sets(
+                docs, "doc_id", "text", n=2, hashed=hashed
             ).collect()
         }
-        sh = (
-            dedup.word_shingles(docs, "doc_id", "text", 2)
-            .select("doc_id", F.xxhash64("shingle").alias("h"))
-            .collect()
+        sh = dedup.word_shingles(docs, "doc_id", "text", 2)
+        if hashed:
+            sh = sh.select("doc_id", F.xxhash64("shingle").alias("shingle"))
+        want: dict[int, list] = {}
+        for r in sh.collect():
+            want.setdefault(r["doc_id"], []).append(r["shingle"])
+        assert sets == {k: sorted(v) for k, v in want.items()}
+        assert len(sets[2]) == 2  # "a b", "b a": repeats collapse
+        assert 3 not in sets  # no shingles -> no set row
+
+    def test_lake_and_streaming_index_writers_store_identical_tables(
+        self, spark, tmp_path
+    ):
+        """write_prefix_index and IncrementalDedupIndex.build share one
+        corpus-index writer: on the same corpus they must store the
+        same shingle_df, signature and (epoch-0) prefix rows."""
+        from zikeiretsu_rs_spark.streaming.neardup import (
+            IncrementalDedupIndex,
         )
-        want: dict[int, list[int]] = {}
-        for r in sh:
-            want.setdefault(r["doc_id"], []).append(r["h"])
-        assert sigs == {k: sorted(v) for k, v in want.items()}
-        assert 3 not in sigs  # no shingles -> no signature row
+
+        corpus = self._random_docs(spark, 23).select("doc_id", "text")
+        lake = str(tmp_path / "lake")
+        dedup.write_prefix_index(corpus, lake, "doc_id", "text", 2, 0.4)
+        stream = str(tmp_path / "stream")
+        IncrementalDedupIndex(spark, stream, n=2, threshold=0.4).build(
+            corpus
+        )
+
+        def rows(path):
+            # columns by name, set arrays order-free (collect_set order
+            # is not part of the stored contract)
+            df = spark.read.parquet(path)
+            return sorted(
+                tuple(sorted(v) if isinstance(v, list) else v for v in r)
+                for r in df.select(*sorted(df.columns)).collect()
+            )
+
+        assert rows(f"{lake}/shingle_df") == rows(f"{stream}/shingle_df")
+        sig = rows(f"{lake}/signature")
+        assert sig and sig == rows(f"{stream}/sigs/epoch=0")
+        pref = rows(f"{lake}/prefix")
+        assert pref and pref == rows(f"{stream}/prefix/epoch=0")
 
 
 class TestResidualKmeansCodebook:

@@ -1183,6 +1183,7 @@ class TestRound15OptPlanShapes:
         )
         # brute reference: explicit distinct shingle sets in python
         import itertools
+        from decimal import ROUND_HALF_UP, Decimal
 
         def shset(t):
             w = t.lower().split()
@@ -1193,7 +1194,10 @@ class TestRound15OptPlanShapes:
             a, b = shset(ta), shset(tb)
             j = len(a & b) / len(a | b)
             if j >= 0.1:
-                want.append((ia, ib, round(j, 6)))
+                # F.round is HALF_UP on the double's shortest decimal
+                # form; Python's round() is half-even, so mirror Spark
+                r6 = Decimal(repr(j)).quantize(Decimal("1e-6"), ROUND_HALF_UP)
+                want.append((ia, ib, float(r6)))
         got_rows = sorted(
             (r.id_a, r.id_b, r.jaccard) for r in got.collect()
         )
@@ -1207,3 +1211,19 @@ class TestRound15OptPlanShapes:
             (r.id_a, r.id_b, r.jaccard) for r in guarded.collect()
         )
         assert g_rows == got_rows, (g_rows, got_rows)
+
+    def test_hashed_shingle_sets_plan_one_exchange(self, spark):
+        """The streaming batch-signature path (shingle_sets with
+        hashed=True, which every sigs writer stores) needs exactly one
+        id-keyed exchange: collect_set does the in-doc distinct
+        map-side, so no (id, shingle)-keyed distinct exchange runs
+        before the set build."""
+        import re
+
+        from zikeiretsu_rs_spark.operators import dedup
+
+        docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+        plan = plan_of(
+            spark, dedup.shingle_sets(docs, "doc_id", "text", 3, hashed=True)
+        )
+        assert len(re.findall(r"\(\d+\) Exchange\b", plan)) == 1, plan[:3000]

@@ -84,11 +84,13 @@ def word_shingles(
     df: DataFrame, id_col: str, text_col: str, n: int = 3,
     distinct: bool = True,
 ) -> DataFrame:
-    """Distinct word-n-gram shingles per document: (id, shingle).
-    Tokenization = lowercase + whitespace split (matches the DuckDB
-    oracle formulation in the test suite). `distinct=False` skips the
-    corpus-wide dedup exchange for consumers whose aggregate is
-    duplicate-insensitive (minhash minima)."""
+    """Word-n-gram shingles per document: (id, shingle), one row per
+    distinct (id, shingle) pair. Tokenization = lowercase + whitespace
+    split (matches the DuckDB oracle formulation in the test suite).
+    `distinct=False` returns one row per shingle OCCURRENCE (in-doc
+    repeats included) and skips the (id, shingle)-keyed exchange —
+    for consumers whose per-doc aggregate removes or ignores repeats
+    anyway (`shingle_sets`' collect_set, minhash minima)."""
     ws = F.split(F.trim(F.lower(F.col(text_col))), r"\s+")
     shingles = F.expr(
         f"transform(sequence(0, size(_ws) - {n}), i -> "
@@ -102,6 +104,45 @@ def word_shingles(
         .select(F.col(id_col), F.explode(shingles).alias("shingle"))
     )
     return out.distinct() if distinct else out
+
+
+def shingle_sets(
+    df: DataFrame, id_col: str, text_col: str, n: int = 3,
+    hashed: bool = False,
+) -> DataFrame:
+    """Per-document shingle set: (id, _set), the one derivation every
+    dedup scorer, prefix ranking and stored index consumes. `hashed`
+    stores xxhash64(shingle) (8-byte elements, the lake/streaming
+    representation) instead of the shingle string; a 64-bit in-doc
+    collision merges two shingles inside the set.
+
+    collect_set over the un-deduplicated explode IS the distinct: the
+    map-side partial aggregate drops in-doc repeats before they ship,
+    so the set costs ONE id-keyed exchange, and size(_set) is the
+    doc's distinct-shingle count. Documents shorter than n words have
+    no row.
+
+    Memory bound: one document's set is built in one task's
+    aggregation buffer, so its size is bounded by the LARGEST
+    document, not the corpus — at most (words - n + 1) elements, i.e.
+    ~8 B per word hashed, plus JVM per-element overhead. One set is
+    never split across tasks or spilled, so the operators assume the
+    largest document fits an executor's memory many times over (see
+    SCALE.md)."""
+    sh = word_shingles(df, id_col, text_col, n, distinct=False)
+    if hashed:
+        sh = sh.select(F.col(id_col), F.xxhash64("shingle").alias("shingle"))
+    return sh.groupBy(id_col).agg(F.collect_set("shingle").alias("_set"))
+
+
+def _shingle_rows(sets: DataFrame, id_col: str) -> DataFrame:
+    """(id, _set) -> one row per distinct shingle: (id, shingle, _sz),
+    `_sz` the full set size as bigint (the stored prefix schema)."""
+    return sets.select(
+        F.col(id_col),
+        F.explode("_set").alias("shingle"),
+        F.size("_set").cast("long").alias("_sz"),
+    )
 
 
 def ngram_jaccard_pairs(
@@ -129,26 +170,10 @@ def ngram_jaccard_pairs(
     """
     from pyspark.sql import Window
 
-    sh = word_shingles(df, id_col, text_col, n, distinct=False)
-    if hash_shingles:
-        sh = sh.select(F.col(id_col), F.xxhash64("shingle").alias("shingle"))
-    # per-doc set build instead of distinct + size window (optimization
-    # round 15, guide §2.4): the former shape paid an (id, shingle)
-    # exchange for the distinct PLUS an id exchange for the _sz window.
-    # collect_set IS the distinct (in-doc duplicate shingles are
-    # removed by the map-side partial aggregate, so they never ship),
-    # the re-explode yields exactly the old distinct rows, and the set
-    # size is the _sz value — one id-keyed exchange, no window. Sizes
-    # are computed BEFORE any doc-freq filtering, as before — the
-    # Jaccard denominator uses full set sizes.
-    sized = (
-        sh.groupBy(id_col)
-        .agg(F.collect_set("shingle").alias("_set"))
-        .select(
-            F.col(id_col),
-            F.explode("_set").alias("shingle"),
-            F.size("_set").alias("_sz"),
-        )
+    # sizes come from the full sets, BEFORE any doc-freq filtering —
+    # the Jaccard denominator uses full set sizes
+    sized = _shingle_rows(
+        shingle_sets(df, id_col, text_col, n, hashed=hash_shingles), id_col
     )
     if max_shingle_doc_freq is not None:
         # doc-frequency cap as a shingle-keyed WINDOW on the same
@@ -306,12 +331,12 @@ def exact_jaccard_for_pairs(
     shape; both produce identical rows (pytest-pinned equal):
     - dense=True (candidates touch most docs — prefix/LSH pipelines):
       per-doc signature arrays + map-side array_intersect. One
-      shingle derivation, but collect_list shuffles the full shingle
-      payload (no map-side combine), so it only pays off when most
-      docs are scored anyway. Measured 2.1x faster on the sf0.1
-      prefix pipeline.
+      shingle-set derivation, but every set array ships whole to
+      each of its pairs, so it only pays off when most docs are
+      scored anyway. Measured 2.1x faster on the sf0.1 prefix
+      pipeline.
     - dense=False (sparse candidates — incremental crawls, <<1% dup
-      rates): the pair-per-shared-shingle row join. Three shingle
+      rates): the pair-per-shared-shingle row join. Three shingle-set
       derivations, but inner joins fan out ONLY candidate ids and
       the size aggregate partial-aggregates map-side. Measured 1.5s
       faster on the sf0.1 incremental path, whose candidates touch a
@@ -342,19 +367,8 @@ def exact_jaccard_for_pairs(
         # has >= defaultParallelism splits and this is a no-op
         # (optimization round 14; measured 1.03 -> 0.73 s per
         # derivation at sf0.1)
-        src = _spread_if_narrow(df)
-        # per-doc set derivation (optimization round 15, guide §2.4):
-        # each of the three consumers below used to pay the distinct's
-        # (id, shingle) exchange AND its own downstream exchange per
-        # re-derivation. collect_set IS the distinct (map-side partial
-        # aggregation), so every re-derivation now costs ONE id-keyed
-        # exchange, the size is free (size(_set)), and the explodes
-        # back to rows stay id-partitioned.
-        sets = (
-            word_shingles(src, id_col, text_col, n, distinct=False)
-            .groupBy(id_col)
-            .agg(F.collect_set("shingle").alias("_set"))
-        )
+        # (the explodes of the id-keyed sets stay id-partitioned)
+        sets = shingle_sets(_spread_if_narrow(df), id_col, text_col, n)
         sz = sets.select(F.col(id_col), F.size("_set").alias("_sz"))
         p = pairs.select("id_a", "id_b", *keep_cols)
         slim = p.select("id_a", "id_b")
@@ -412,55 +426,11 @@ def exact_jaccard_for_pairs(
     # dense path: per-doc signature arrays, map-side array_intersect.
     # A candidate-hot doc replicates its array across its pairs
     # exactly as it replicated its shingle rows in the sparse shape
-    # (same shuffle bytes, far fewer rows).
-    #
-    # collect_set over the UN-deduplicated explode (optimization
-    # round 15, guide §2.4): the former distinct().groupBy()
-    # .collect_list() shape paid TWO full-shingle-table exchanges —
-    # one keyed (id, shingle) for the distinct, one keyed id for the
-    # array build. collect_set IS the distinct, partial-aggregated
-    # map-side (in-doc duplicate shingles never leave their task), so
-    # the same set arrays come out of ONE id-keyed exchange. Element
-    # order differs (both formulations were unordered); consumers
-    # take only size/array_intersect, which are order-free.
-    sets = (
-        word_shingles(df, id_col, text_col, n, distinct=False)
-        .groupBy(id_col)
-        .agg(F.collect_set("shingle").alias("_set"))
-    )
+    # (same shuffle bytes, far fewer rows). Set element order is free:
+    # the scorer takes only size/array_intersect.
     return jaccard_from_signatures(
-        sets, pairs, id_col=id_col, threshold=threshold,
-        keep_cols=keep_cols,
-    )
-
-
-def doc_signatures(
-    df: DataFrame, id_col: str, text_col: str, n: int = 3
-) -> DataFrame:
-    """Per-document shingle-set signature: (id, _set) where _set is
-    the array of the doc's distinct word-n-gram shingles, xxhash64-
-    hashed (8 bytes per shingle — the scale representation the
-    candidate join already ships). The materialized input of
-    `jaccard_from_signatures`; `write_prefix_index` persists it so
-    recurring crawls never re-shingle corpus text (see the collision
-    note there)."""
-    return (
-        word_shingles(df, id_col, text_col, n)
-        .select(F.col(id_col), F.xxhash64("shingle").alias("shingle"))
-        .groupBy(id_col)
-        .agg(F.collect_list("shingle").alias("_set"))
-    )
-
-
-def _signatures_from_hashed(hashed_shingles: DataFrame, id_col: str) -> DataFrame:
-    """`doc_signatures` tail over a precomputed (id, shingle-hash)
-    table — lets a caller that already derived the hashed shingle
-    table (e.g. for prefix ranking) build the signature arrays from
-    it instead of re-tokenizing the text (optimization round 14).
-    Jaccard consumers only take set sizes/intersections, so the
-    collect_list element order is free."""
-    return hashed_shingles.groupBy(id_col).agg(
-        F.collect_list("shingle").alias("_set")
+        shingle_sets(df, id_col, text_col, n), pairs, id_col=id_col,
+        threshold=threshold, keep_cols=keep_cols,
     )
 
 
@@ -816,6 +786,35 @@ def dedup_by_clusters(
     return df.join(non_rep, id_col, "left_anti")
 
 
+def _prefix_cut(rows: DataFrame, id_col: str, threshold: float) -> DataFrame:
+    """The rank-and-cut every prefix table goes through: rows (id,
+    shingle, _sz, _df) ranked per document by (_df, shingle) and cut
+    to the prefix the completeness theorem needs.
+
+    Output: id, shingle, _sz."""
+    from pyspark.sql import Window
+
+    return (
+        rows.withColumn(
+            "_rk",
+            F.row_number().over(
+                Window.partitionBy(id_col).orderBy("_df", "shingle")
+            ),
+        )
+        .where(
+            # keep rank r iff overlap (sz - r + 1) could pass the
+            # scorer: SAME double-division `>= t` the scorer uses, so
+            # rounding is monotone-consistent with it. A ceil(sz*t)
+            # formulation can round UP where t*sz is integral (t=0.07,
+            # sz=100 -> ceil 8) and silently shorten the prefix below
+            # the theorem's length.
+            (F.col("_sz") - F.col("_rk") + F.lit(1)) / F.col("_sz")
+            >= F.lit(float(threshold))
+        )
+        .select(id_col, "shingle", "_sz")
+    )
+
+
 def ranked_prefixes(
     df: DataFrame,
     id_col: str,
@@ -824,7 +823,6 @@ def ranked_prefixes(
     threshold: float = 0.5,
     hash_shingles: bool = False,
     extra_cols: tuple[str, ...] = (),
-    skew_safe: bool = False,
 ) -> DataFrame:
     """The prefix table behind the prefix-filtering join: for each
     document, its (|A| - ceil(t·|A|) + 1) rarest shingles under the
@@ -839,76 +837,28 @@ def ranked_prefixes(
     (they ride the shingle rows; the rank window is per-document, so
     they do not perturb the order).
 
-    `skew_safe` switches the doc-frequency attach from a
-    shingle-keyed WINDOW to a map-side-combined groupBy + join-back.
-    The window is faster where shingle frequencies are sane (measured
-    at sf0.1, uniform corpus: 3.7 vs 4.7 s for the full prefix-pair
-    pipeline) because it costs one exchange instead of two — but a
-    window partition is UNSPLITTABLE: a boilerplate shingle sitting
-    in most of a 100 TB corpus funnels its rows through one task. The
-    groupBy formulation partial-aggregates the hot key on every
-    mapper and leaves the join-back as an AQE-skew-splittable
-    exchange, so it has no straggler ceiling (same measured corpus,
-    80%-stop-phrase skew: 5.6 vs 5.0 s — the crossover grows with
-    real skew). Output identical either way (equality pytest-pinned).
+    The doc-frequency attach is a shingle-keyed WINDOW: one exchange
+    where a groupBy + join-back costs two (measured at sf0.1, uniform
+    corpus: 3.7 vs 4.7 s for the full prefix-pair pipeline). Its limit
+    is a boilerplate shingle present in most of the corpus: a window
+    partition cannot be split, so that shingle's rows run in one task.
 
     Output: id, shingle, _sz, *extra_cols.
     """
     from pyspark.sql import Window
 
     base = df.select(F.col(id_col), F.col(text_col), *extra_cols)
-    # per-doc set build (optimization round 15, guide §2.4): collect_set
-    # over the un-deduplicated explode IS the distinct — in-doc
-    # duplicate shingles are removed by the map-side partial aggregate
-    # — and the set size IS _sz, so the former count-per-id window
-    # aggregate disappears; the re-explode yields exactly the old
-    # distinct rows. (With hash_shingles a 64-bit in-doc collision now
-    # also merges inside the set — the same "collision can only merge
-    # two shingles" trade the docstring already makes for the join.)
-    sh = word_shingles(base, id_col, text_col, n, distinct=False)
-    if hash_shingles:
-        sh = sh.select(F.col(id_col), F.xxhash64("shingle").alias("shingle"))
-    sh = (
-        sh.groupBy(id_col)
-        .agg(F.collect_set("shingle").alias("_set"))
-        .select(
-            F.col(id_col),
-            F.explode("_set").alias("shingle"),
-            F.size("_set").alias("_sz"),
-        )
+    rows = _shingle_rows(
+        shingle_sets(base, id_col, text_col, n, hashed=hash_shingles), id_col
     )
-    t = float(threshold)
-    if skew_safe:
-        dfreq = sh.groupBy("shingle").agg(F.count("*").alias("_df"))
-        with_df = sh.join(dfreq, "shingle")
-    else:
-        # window order is exchange-count-load-bearing: doc-frequency
-        # FIRST (one shingle-keyed exchange), then the per-doc rank
-        # window on the id partitioning. The naive _rk -> _df order
-        # would shuffle the full shingle table a third time.
-        with_df = sh.withColumn(
-            "_df", F.count("*").over(Window.partitionBy("shingle"))
-        )
-    ranked = (
-        with_df
-        .withColumn(
-            "_rk",
-            F.row_number().over(
-                Window.partitionBy(id_col).orderBy("_df", "shingle")
-            ),
-        )
-        .where(
-            # keep rank r iff overlap (sz - r + 1) could pass the
-            # scorer: SAME double-division `>= t` the scorer uses, so
-            # rounding is monotone-consistent with it. The former
-            # ceil(sz*t) formulation could round UP on thresholds
-            # where t*sz is integral (t=0.07, sz=100 -> ceil 8) and
-            # silently shorten the prefix below the theorem's length
-            # (judged ADVICE r06 medium).
-            (F.col("_sz") - F.col("_rk") + F.lit(1)) / F.col("_sz")
-            >= F.lit(t)
-        )
-        .select(id_col, "shingle", "_sz")
+    # window order is exchange-count-load-bearing: doc-frequency
+    # FIRST (one shingle-keyed exchange), then the per-doc rank window
+    # on the id partitioning. The naive _rk -> _df order would shuffle
+    # the full shingle table a third time.
+    ranked = _prefix_cut(
+        rows.withColumn("_df", F.count("*").over(Window.partitionBy("shingle"))),
+        id_col,
+        threshold,
     )
     if extra_cols:
         # joined AFTER the prefix cut: only ~(1-t)·|shingles| rows
@@ -1297,12 +1247,9 @@ def write_prefix_index(
     rarest-first intent).
 
     Shingles are stored xxhash64-hashed (8-byte keys on the lake,
-    exactly what ships through the candidate join). The doc-frequency
-    AGGREGATION is computed once — written as shingle_df and read back
-    to rank the corpus prefixes (the same
-    `rank_prefixes_under_stored_order` every probe uses, so the
-    completeness-critical ranking has exactly one implementation);
-    the cheap map-side shingle explode runs once per consumer.
+    exactly what ships through the candidate join). The tables are
+    written by `write_corpus_index`, which the streaming
+    `IncrementalDedupIndex.build` shares.
 
     A third table, `<path>/signature` (id, _set: the doc's full
     hashed-shingle array), feeds the exact re-score, so a probe run
@@ -1316,37 +1263,47 @@ def write_prefix_index(
     can refuse a mismatched index instead of silently generating
     incomplete candidates; metadata IO goes through `catalog.fsio`, so
     object-store index paths (s3a://, gs://) work like local ones."""
-    t = float(threshold)
-    sh = word_shingles(corpus, id_col, text_col, n).select(
-        F.col(id_col), F.xxhash64("shingle").alias("shingle")
+    write_corpus_index(
+        corpus, path, id_col, text_col, n, threshold,
+        f"{path}/signature", f"{path}/prefix",
     )
-    dfreq = sh.groupBy("shingle").agg(F.count("*").alias("_df"))
-    dfreq.write.mode("overwrite").parquet(f"{path}/shingle_df")
-    sh.groupBy(id_col).agg(
-        F.collect_list("shingle").alias("_set")
-    ).write.mode("overwrite").parquet(f"{path}/signature")
-    spark = corpus.sparkSession
-    stored_df = spark.read.parquet(f"{path}/shingle_df")
-    rank_prefixes_under_stored_order(
-        stored_df,
-        corpus.select(F.col(id_col), F.col(text_col)),
-        id_col,
-        text_col,
-        n,
-        t,
-    ).write.mode("overwrite").parquet(f"{path}/prefix")
-    write_prefix_index_meta(path, n, t)
 
 
-def write_prefix_index_meta(path: str, n: int, threshold: float) -> None:
-    """Single serialization point for `index_meta.json` (the file
-    `check_prefix_index_meta` parses) — shared by `write_prefix_index`
-    and the streaming `IncrementalDedupIndex.build` so the schema
-    cannot drift between writers. URI-safe via catalog.fsio."""
+def write_corpus_index(
+    corpus: DataFrame,
+    root: str,
+    id_col: str,
+    text_col: str,
+    n: int,
+    threshold: float,
+    signature_path: str,
+    prefix_path: str,
+) -> None:
+    """Write a corpus index from the corpus's hashed `shingle_sets`:
+    shingle doc-frequencies (`<root>/shingle_df`: shingle, _df),
+    signatures (id, _set), the prefixes ranked under that stored order
+    (id, shingle, _sz), then `<root>/index_meta.json` (the file
+    `check_prefix_index_meta` parses). Shared by `write_prefix_index`
+    and the streaming `IncrementalDedupIndex.build`, so neither the
+    tables nor the meta schema can drift between writers. The
+    doc-frequency table is read back for the ranking, so the corpus
+    goes through the same `rank_prefixes_under_stored_order` every
+    later batch uses — the completeness-critical ranking has one
+    implementation. Metadata IO is URI-safe via catalog.fsio."""
     from ..catalog import fsio
 
+    shingle_df_path = fsio.join(root, "shingle_df")
+    sets = shingle_sets(corpus, id_col, text_col, n, hashed=True)
+    sets.select(F.explode("_set").alias("shingle")).groupBy("shingle").agg(
+        F.count("*").alias("_df")
+    ).write.mode("overwrite").parquet(shingle_df_path)
+    sets.write.mode("overwrite").parquet(signature_path)
+    stored_df = corpus.sparkSession.read.parquet(shingle_df_path)
+    rank_prefixes_under_stored_order(
+        stored_df, sets, id_col, threshold
+    ).write.mode("overwrite").parquet(prefix_path)
     fsio.write_json_atomic(
-        fsio.join(path, "index_meta.json"),
+        fsio.join(root, "index_meta.json"),
         {
             "n": int(n),
             "threshold": float(threshold),
@@ -1429,25 +1386,19 @@ def incremental_dedup_lake(
     )
     corpus_pref = spark.read.parquet(f"{index_path}/prefix")
     shingle_df = spark.read.parquet(f"{index_path}/shingle_df")
-    new_batch = flagged.where(F.col("_new"))
-    # the new batch's hashed shingle table feeds THREE consumers
-    # (prefix ranking + both sides of the signature-score join);
-    # derive it ONCE into an eager local checkpoint instead of
-    # re-tokenizing the batch text per consumer branch (optimization
-    # round 14: 7 Generates -> 1 in the plan). Spread the tokenize
-    # pass first when the batch scan has fewer splits than the
-    # session has cores (single-row-group files scan as one task) —
-    # a no-op at production split counts, same rule as
-    # exact_jaccard_for_pairs.
-    src = _spread_if_narrow(new_batch)
-    new_sh = (
-        word_shingles(src, id_col, text_col, n)
-        .select(F.col(id_col), F.xxhash64("shingle").alias("shingle"))
-        .localCheckpoint(eager=True)
-    )
+    # the new batch's hashed shingle sets feed THREE consumers (prefix
+    # ranking + both sides of the signature-score join); derive them
+    # ONCE into an eager local checkpoint instead of re-tokenizing the
+    # batch text per consumer branch. Spread the tokenize pass first
+    # when the batch scan has fewer splits than the session has cores
+    # (single-row-group files scan as one task) — a no-op at
+    # production split counts, same rule as exact_jaccard_for_pairs.
+    new_sets = shingle_sets(
+        _spread_if_narrow(flagged.where(F.col("_new"))),
+        id_col, text_col, n, hashed=True,
+    ).localCheckpoint(eager=True)
     new_pref = rank_prefixes_under_stored_order(
-        shingle_df, new_batch, id_col, text_col,
-        n, threshold, hashed_shingles=new_sh,
+        shingle_df, new_sets, id_col, threshold
     ).cache()
     build = (
         corpus_pref.select(id_col, "shingle", "_sz")
@@ -1458,7 +1409,7 @@ def incremental_dedup_lake(
     meta_path = fsio.join(index_path, "index_meta.json")
     if fsio.exists(meta_path) and fsio.read_json(meta_path).get("sigs"):
         sigs = spark.read.parquet(f"{index_path}/signature").unionByName(
-            _signatures_from_hashed(new_sh, id_col)
+            new_sets
         )
     return _incremental_verdicts(
         flagged, build, new_pref, id_col, text_col, n, threshold,
@@ -1468,60 +1419,32 @@ def incremental_dedup_lake(
 
 def rank_prefixes_under_stored_order(
     shingle_df: DataFrame,
-    docs: DataFrame,
+    sets: DataFrame,
     id_col: str,
-    text_col: str,
-    n: int = 3,
     threshold: float = 0.5,
-    hashed_shingles: DataFrame | None = None,
 ) -> DataFrame:
     """Rank a batch's prefixes under a STORED corpus-frozen shingle
     order (the `shingle_df` table `write_prefix_index` persists):
-    shingle the batch, left-join the stored doc-frequencies (unseen
-    shingles -> df 0, i.e. rarest-first), take each document's
-    (|A| - ceil(t·|A|) + 1) lowest-(df, shingle) shingles. Because
-    every consumer of the index ranks under this SAME frozen order,
-    the prefix-filter completeness theorem applies across arbitrarily
-    many later batches — the property that makes the index reusable
-    by both the batch lake path (`incremental_dedup_lake`) and the
-    streaming bridge (`streaming/neardup.py:IncrementalDedupIndex`).
+    left-join the stored doc-frequencies onto the batch's hashed
+    `shingle_sets` rows (unseen shingles -> df 0, i.e. rarest-first)
+    and take each document's (|A| - ceil(t·|A|) + 1) lowest-(df,
+    shingle) shingles. Because every consumer of the index ranks
+    under this SAME frozen order, the prefix-filter completeness
+    theorem applies across arbitrarily many later batches — the
+    property that makes the index reusable by both the batch lake
+    path (`incremental_dedup_lake`) and the streaming bridge
+    (`streaming/neardup.py:IncrementalDedupIndex`).
 
     Output: id, shingle (xxhash64), _sz.
     """
-    from pyspark.sql import Window
-
-    t = float(threshold)
-    # `hashed_shingles`: a precomputed (id, xxhash64-shingle) table
-    # for `docs` — callers that need the same table for signature
-    # building pass it so the tokenize+explode runs once (r14)
-    sh = (
-        hashed_shingles
-        if hashed_shingles is not None
-        else word_shingles(docs, id_col, text_col, n).select(
-            F.col(id_col), F.xxhash64("shingle").alias("shingle")
-        )
-    )
-    # stored-df join FIRST (shingle-keyed exchange), then both per-doc
-    # windows on one id-keyed exchange — same two-exchange shape as
-    # ranked_prefixes
-    return (
-        sh.join(shingle_df, "shingle", "left")
+    # stored-df join FIRST (shingle-keyed exchange), then the rank
+    # window on one id-keyed exchange — same shape as ranked_prefixes
+    rows = (
+        _shingle_rows(sets, id_col)
+        .join(shingle_df, "shingle", "left")
         .withColumn("_df", F.coalesce(F.col("_df"), F.lit(0)))
-        .withColumn("_sz", F.count("*").over(Window.partitionBy(id_col)))
-        .withColumn(
-            "_rk",
-            F.row_number().over(
-                Window.partitionBy(id_col).orderBy("_df", "shingle")
-            ),
-        )
-        .where(
-            # same scorer-consistent division cut as ranked_prefixes
-            # (no FP-inflatable ceil; ADVICE r06 medium)
-            (F.col("_sz") - F.col("_rk") + F.lit(1)) / F.col("_sz")
-            >= F.lit(t)
-        )
-        .select(id_col, "shingle", "_sz")
     )
+    return _prefix_cut(rows, id_col, threshold)
 
 
 def corpus_diff(

@@ -213,8 +213,8 @@ def tfidf_topk(
     straggler hazard. Doc-frequency stays a groupBy + join-back (NOT
     a term-keyed window): a boilerplate term's window partition would
     be unsplittable, while the groupBy partial-aggregates hot terms
-    map-side (same reasoning as dedup.ranked_prefixes' skew_safe
-    form).
+    map-side and leaves the join-back as an exchange AQE can split
+    on skew.
 
     Output: query_id, doc_id, score (round 6), rank (1..k, ties by
     doc id).
